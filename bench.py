@@ -21,7 +21,7 @@ import time
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 SF_DIR = os.environ["SPARK_GRAFT_SF_DIR"]
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 FRONTIER_N = int(os.environ.get("BENCH_FRONTIER_N", 2_000_000))
 FULL_DUMP_NAME = os.environ.get("BENCH_FULL_NAME", "bench_r05_full.json")
 

@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF_DIR = os.environ["SPARK_GRAFT_SF_DIR"]
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 REPS = int(os.environ.get("TIME_REPS", "4"))
 
 

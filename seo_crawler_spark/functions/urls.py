@@ -17,7 +17,6 @@ variant backed by urllib.parse exists for parity testing only.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -119,23 +118,6 @@ def canonicalize_url_sql(col: str) -> str:
     )
 
 
-def clean_url_reference(url: Column) -> Column:
-    """The reference's *exact* cleaning: fragment strip + rebuild
-    scheme://netloc/path[?query] (src/core/link_manager.py:34-38) —
-    no lowercasing, no port stripping, no param sort."""
-    scheme = F.regexp_extract(url, _SCHEME_RE, 1)
-    netloc = F.regexp_extract(url, _AUTHORITY_RE, 1)
-    path = url_path(url)
-    q = url_query(url)
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        netloc,
-        path,
-        F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
-    )
-
-
 def is_internal(url: Column, base_domain: Column | str) -> Column:
     """www-stripped netloc equality vs base domain (reference:
     src/core/link_manager.py:158-163 compares urlparse().netloc, which
@@ -181,9 +163,3 @@ def _canonicalize_py(u: str) -> str:
     path = p.path or "/"
     query = "&".join(sorted(p.query.split("&"))) if p.query else ""
     return f"{scheme}://{netloc}{path}" + (f"?{query}" if query else "")
-
-
-def canonicalize_url_pandas(s: pd.Series) -> pd.Series:
-    """Vectorized urllib-backed canonicalizer (Series→Series); registered as
-    a pandas UDF in tests to cross-check the native expression."""
-    return s.map(_canonicalize_py)

@@ -93,34 +93,6 @@ W_SCALE = 1_000_000  # weight fixed-point grid
 POSITIVE_LANG = "en"
 
 
-def _features(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(feats, meta): hashed token-count features + per-doc label/length.
-
-    feats: (doc_id, j, c) — j = md5int(token) % HASH_DIM (md5-derived so
-    both engines hash identically), c = token occurrences. meta:
-    (doc_id, n_tok, y). Docs with zero tokens appear in neither (they
-    carry no gradient and score null downstream)."""
-    tokd = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(tokens(F.col("text"))).alias("t"),
-    )
-    feats = tokd.groupBy(
-        "doc_id", (md5int(F.col("t")) % HASH_DIM).alias("j")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    meta = tokd.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tok"),
-        F.max(
-            F.when(F.col("lang") == POSITIVE_LANG, F.lit(1)).otherwise(
-                F.lit(0)
-            )
-        )
-        .cast("long")
-        .alias("y"),
-    )
-    return feats, meta
-
-
 def _feats_meta_joined(docs: DataFrame) -> DataFrame:
     """(doc_id, j, c, n_tok, y): the hashed features WITH their doc's
     meta columns inlined, hash-partitioned by doc_id and checkpointed.

@@ -113,7 +113,8 @@ def _insert_all(table: np.ndarray, i1s, i2s, fps, rng_state: int = 0x9E3779B9) -
             continue
         cell, cur = i1, fp
         for _ in range(MAX_KICKS):
-            state = (state * np.uint64(6364136223846793005) + np.uint64(1442695040888963407)) & np.uint64(0xFFFFFFFFFFFFFFFF)
+            with np.errstate(over="ignore"):  # intended uint64 wraparound
+                state = (state * np.uint64(6364136223846793005) + np.uint64(1442695040888963407)) & np.uint64(0xFFFFFFFFFFFFFFFF)
             slot = int(state >> np.uint64(61)) % SLOTS
             cur, table[cell][slot] = int(table[cell][slot]), cur
             cell = _alt_cell(cell, cur, m)

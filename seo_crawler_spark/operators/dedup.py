@@ -785,16 +785,6 @@ def dedup_embedding_cosine_brute(
     )
 
 
-def dedup_embedding_cosine_brute_sql(threshold: float = 0.45) -> str:
-    return f"""
-SELECT x.vec_id AS a, y.vec_id AS b,
-       round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) AS cos
-FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {threshold}
-ORDER BY a, b
-"""
-
-
 # 16-bit hyperplane signature banded 4×4: candidates share at least one
 # band — the same banding shape as MinHash/SimHash above. 4-bit bands
 # are deliberately short so the synthetic testdata's weakly-similar

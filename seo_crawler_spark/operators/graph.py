@@ -15,17 +15,34 @@ dangling node is deterministic too.
 
 The edge list derives from the documents table (3 affine out-links per
 doc, self-loops dropped) so the oracle can build the identical graph;
-on real crawl output the same loop runs over the links table
-(source→target). Scale notes: each iteration is one equi-join + one
-map-side-combined agg, scores checkpoint per iteration (without the
-lineage barrier iteration k replans all k-1 predecessors — the same
-quadratic-driver trap the wave loop avoids), and the edge table with
-its outdegree column is built once and reused.
+on real crawl output the same loops run over the links table
+(source→target). Every operator starts from :func:`_graph` (docs, their
+count, the edge list).
+
+Shared pieces, written once and used by every operator below:
+
+- :func:`_iterate` is the fixed-count loop: ``iters`` applications of
+  a step, each result materialized by an eager ``localCheckpoint``.
+  Without that lineage barrier iteration k replans all k-1
+  predecessors — the same quadratic-driver trap the wave loop avoids —
+  and a step is one or two equi-joins plus a map-side-combined agg.
+- :func:`_with_degree` is the edge table with its degree column(s),
+  built once per graph and checkpointed.
+- :func:`_pr_iterate` is the PageRank step; pagerank, trustrank,
+  spam_mass, rank_correlation and the warm-start experiment differ
+  only in the seed vector and the base (teleport) term.
+- :func:`_bfs` is the delta-frontier BFS (seed distance, bow-tie).
+- :func:`_gather` is the hub/authority half-step (hits, salsa).
+- :func:`_ranked` is the rank-by-score ``row_number`` tail.
+
+Loops kept outside ``_iterate`` carry more than one DataFrame of state
+(hits, salsa, hyperball, kcore) or stop on a data-dependent fixed point
+(connected_components); each says so where it runs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import MD5INT_SQL, md5int
@@ -67,27 +84,47 @@ def _edges(docs: DataFrame, n: int) -> DataFrame:
     return e.filter(F.col("src") != F.col("dst"))
 
 
-def _e2_table(docs: DataFrame, n: int) -> DataFrame:
-    """Degree-annotated edge table (src, dst, outdeg), checkpointed.
-    Built identically by pagerank / trustrank / opic — compositions
-    (spam_mass, rank_correlation) build it ONCE and pass it through
-    their members' ``_e2`` parameter (round 6: each member used to
-    re-derive and re-checkpoint the same table)."""
-    e = _edges(docs, n)
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    return e.join(outdeg, "src").localCheckpoint(eager=True)
-
-
-def pagerank(
-    spark: SparkSession, sf_dir: str, iters: int = ITERS,
-    _e2: DataFrame | None = None,
-) -> DataFrame:
+def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, DataFrame]:
+    """(docs, n, e): the documents' doc_id column, its row count (one
+    bounded driver scalar) and the lazy generated edge list."""
     docs = load(spark, "documents", sf_dir).select("doc_id")
     n = docs.count()
-    e2 = _e2 if _e2 is not None else _e2_table(docs, n)
+    return docs, n, _edges(docs, n)
 
-    score = docs.select("doc_id", F.lit(SCALE).cast("long").alias("score"))
-    for _ in range(iters):
+
+def _with_degree(e: DataFrame, *ends: str) -> DataFrame:
+    """The edge table joined with the degree of each named end — "src"
+    adds ``outdeg``, "dst" adds ``indeg`` — and checkpointed."""
+    out = e
+    for end in ends:
+        name = "outdeg" if end == "src" else "indeg"
+        out = out.join(e.groupBy(end).agg(F.count(F.lit(1)).alias(name)), end)
+    return out.localCheckpoint(eager=True)
+
+
+def _iterate(state: DataFrame, step, iters: int) -> DataFrame:
+    """``iters`` rounds of ``state = step(state, k)`` (k = 1..iters),
+    each round's result materialized by an eager localCheckpoint."""
+    for k in range(1, iters + 1):
+        state = step(state, k).localCheckpoint(eager=True)
+    return state
+
+
+def _uniform(nodes: DataFrame, col: str = "score") -> DataFrame:
+    """Every row of ``nodes`` with ``col`` = SCALE: the uniform start."""
+    return nodes.select(*nodes.columns, F.lit(SCALE).cast("long").alias(col))
+
+
+def _pr_iterate(
+    docs: DataFrame, e2: DataFrame, seed: DataFrame, iters: int, base=None
+) -> DataFrame:
+    """(doc_id, score) after ``iters`` PageRank steps from ``seed``:
+    score ← base + Σ (score·85) div (100·outdeg) over in-edges of the
+    degree-annotated edge table ``e2``. ``base`` is the uniform
+    teleport term BASE unless a seed-biased Column is given."""
+    base = F.lit(BASE).cast("long") if base is None else base
+
+    def step(score: DataFrame, _k: int) -> DataFrame:
         contrib = (
             e2.join(score, e2.src == score.doc_id)
             .select(
@@ -99,24 +136,28 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("m"))
         )
-        score = (
-            docs.join(contrib, docs.doc_id == contrib.dst, "left")
-            .select(
-                "doc_id",
-                (F.lit(BASE).cast("long") + F.coalesce("m", F.lit(0))).alias(
-                    "score"
-                ),
-            )
-            .localCheckpoint(eager=True)  # truncate per-iteration lineage
+        return docs.join(contrib, docs.doc_id == contrib.dst, "left").select(
+            "doc_id", (base + F.coalesce("m", F.lit(0))).alias("score")
         )
-    from pyspark.sql import Window
 
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    return _iterate(seed, step, iters)
+
+
+def _ranked(df: DataFrame, by: str, key: str, *cols) -> DataFrame:
+    """``cols`` plus ``rnk`` = row_number by ``by`` desc, ties by
+    ``key`` asc, ordered by rnk."""
+    w = Window.orderBy(F.desc(by), F.asc(key))
     return (
-        score.withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "score", "rnk")
+        df.withColumn("rnk", F.row_number().over(w))
+        .select(*cols, "rnk")
         .orderBy("rnk")
     )
+
+
+def pagerank(spark: SparkSession, sf_dir: str, iters: int = ITERS) -> DataFrame:
+    docs, _, e = _graph(spark, sf_dir)
+    score = _pr_iterate(docs, _with_degree(e, "src"), _uniform(docs), iters)
+    return _ranked(score, "score", "doc_id", "doc_id", "score")
 
 
 def pagerank_sql(iters: int = ITERS) -> str:
@@ -164,9 +205,22 @@ FROM {prev} ORDER BY rnk
 TRUST_SEEDS = 25
 
 
+def _trust_scores(
+    docs: DataFrame, n: int, e2: DataFrame, iters: int, n_seeds: int
+) -> DataFrame:
+    """PageRank whose seed vector and base term are the seed-restricted
+    teleport: the SAME total mass as pagerank's (BASE·N) split over the
+    ``n_seeds`` trusted pages."""
+    seed_base = F.when(
+        F.col("doc_id") < n_seeds, F.lit((BASE * n) // n_seeds).cast("long")
+    ).otherwise(F.lit(0).cast("long"))
+    seed = docs.select("doc_id", seed_base.alias("score"))
+    return _pr_iterate(docs, e2, seed, iters, seed_base)
+
+
 def trustrank_scores(
     spark: SparkSession, sf_dir: str, iters: int = ITERS,
-    n_seeds: int = TRUST_SEEDS, _e2: DataFrame | None = None,
+    n_seeds: int = TRUST_SEEDS,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004): PageRank
     with the teleport mass restricted to a trusted seed set, so trust
@@ -176,56 +230,14 @@ def trustrank_scores(
     ``reachable = false`` (zero trust after k rounds) marks pages no
     trusted page endorses within k hops.
 
-    Same execution discipline as :func:`pagerank`: INTEGER fixed-point
-    throughout (per-edge contribution ``(score·85) div (100·outdeg)``),
-    so k iterations are bit-identical between Spark and the unrolled
-    DuckDB CTE oracle; each iteration is one equi-join + one
-    map-side-combined agg with a per-iteration lineage checkpoint. The
-    seed base term injects the SAME total mass as pagerank's uniform
-    teleport (BASE·N split over |S| seeds) — n and |S| are two bounded
-    driver scalars, the pagerank-n pattern."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e2 = _e2 if _e2 is not None else _e2_table(docs, n)
-
-    tbase = (BASE * n) // n_seeds
-    seed_base = F.when(
-        F.col("doc_id") < n_seeds, F.lit(tbase).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
-    score = docs.select("doc_id", seed_base.alias("score"))
-    for _ in range(iters):
-        contrib = (
-            e2.join(score, e2.src == score.doc_id)
-            .select(
-                "dst",
-                F.expr(
-                    f"(score * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                ).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
-        )
-        score = (
-            docs.join(contrib, docs.doc_id == contrib.dst, "left")
-            .select(
-                "doc_id",
-                (seed_base + F.coalesce("m", F.lit(0))).alias("score"),
-            )
-            .localCheckpoint(eager=True)  # truncate per-iteration lineage
-        )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        score.withColumn("rnk", F.row_number().over(w))
-        .select(
-            "doc_id",
-            F.col("score").alias("tscore"),
-            (F.col("score") > 0).alias("reachable"),
-            "rnk",
-        )
-        .orderBy("rnk")
-    )
+    The shared PageRank step (module docstring) with the seed base term
+    of :func:`_trust_scores` — n and |S| are two bounded driver
+    scalars, the pagerank-n pattern."""
+    docs, n, e = _graph(spark, sf_dir)
+    score = _trust_scores(docs, n, _with_degree(e, "src"), iters, n_seeds)
+    tscore = F.col("score").alias("tscore")
+    reachable = (F.col("score") > 0).alias("reachable")
+    return _ranked(score, "score", "doc_id", "doc_id", tscore, reachable)
 
 
 def trustrank_sql(iters: int = ITERS, n_seeds: int = TRUST_SEEDS) -> str:
@@ -294,27 +306,24 @@ def dedup_clusters(spark: SparkSession, sf_dir: str, iters: int = CC_ITERS) -> D
     edges = pairs.unionByName(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    for _ in range(iters):
+
+    def step(labels: DataFrame, _k: int) -> DataFrame:
         neigh = (
             edges.join(labels, edges.b == labels.node)
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("label").alias("nlabel"))
         )
-        labels = (
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(neigh, "node", "left").select(
+            "node",
+            F.least(
+                F.col("label"), F.coalesce("nlabel", F.col("label"))
+            ).alias("label"),
         )
+
+    nodes = edges.select(F.col("a").alias("node")).distinct()
+    labels = _iterate(
+        nodes.select("node", F.col("node").alias("label")), step, iters
+    )
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("label").alias("cluster_id"),
@@ -374,9 +383,7 @@ def anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode is a per-dst window over at most |vocab| rows per target —
     bounded fan-in, no global window, no joins wider than the final
     count-merge."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
+    _, _, e = _graph(spark, sf_dir)
     v = len(_ANCHOR_VOCAB)
     anchor = F.element_at(
         F.array(*[F.lit(a) for a in _ANCHOR_VOCAB]),
@@ -384,8 +391,6 @@ def anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ec = e.select("src", "dst", anchor.alias("anchor"))
     per_anchor = ec.groupBy("dst", "anchor").agg(F.count(F.lit(1)).alias("c"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("dst").orderBy(F.desc("c"), F.asc("anchor"))
     top = (
         per_anchor.withColumn("rnk", F.row_number().over(w))
@@ -445,6 +450,23 @@ ORDER BY doc_id
 HITS_ITERS = 3
 
 
+def _gather(
+    docs: DataFrame, e: DataFrame, state: DataFrame,
+    frm: str, to: str, share, col: str,
+) -> DataFrame:
+    """(doc_id, col): Σ ``share`` over the edges whose ``frm`` end joins
+    ``state``, summed at their ``to`` end — 0 for docs with no such
+    edge. One equi-join + one map-side-combined agg (hits, salsa)."""
+    raw = (
+        e.join(state, e[frm] == state.doc_id)
+        .groupBy(F.col(to).alias("doc_id"))
+        .agg(F.sum(share).alias(col))
+    )
+    return docs.join(raw, "doc_id", "left").select(
+        "doc_id", F.coalesce(col, F.lit(0)).alias(col)
+    )
+
+
 def hits_scores(spark: SparkSession, sf_dir: str, iters: int = HITS_ITERS) -> DataFrame:
     """HITS (Kleinberg 1999): authority(d) ← Σ hub(s) over in-edges,
     hub(s) ← Σ authority(d) over out-edges, normalized each half-step —
@@ -462,11 +484,12 @@ def hits_scores(spark: SparkSession, sf_dir: str, iters: int = HITS_ITERS) -> Da
 
     Scale shape: each half-step is one equi-join + one map-side-combined
     agg; the L1 sum is a single scalar broadcast (crossJoin with a 1-row
-    frame — no driver round-trip, no collect); lineage checkpoints per
-    iteration like the pagerank loop."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n).localCheckpoint(eager=True)
+    frame — no driver round-trip, no collect). The loop carries two
+    frames of state (hub and auth, both in the output), so it checkpoints
+    each normalized half-step itself instead of going through
+    ``_iterate``."""
+    docs, _, e = _graph(spark, sf_dir)
+    e = e.localCheckpoint(eager=True)
 
     def _normalized(raw: DataFrame, col: str) -> DataFrame:
         total = raw.agg(F.sum(col).alias("__t"))
@@ -479,39 +502,12 @@ def hits_scores(spark: SparkSession, sf_dir: str, iters: int = HITS_ITERS) -> Da
             .localCheckpoint(eager=True)
         )
 
-    hub = docs.select("doc_id", F.lit(SCALE).cast("long").alias("hub"))
-    auth = None
+    hub = _uniform(docs, "hub")
     for _ in range(iters):
-        raw_auth = (
-            e.join(hub, e.src == hub.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.sum("hub").alias("auth"))
-        )
-        auth = _normalized(
-            docs.join(raw_auth, "doc_id", "left").select(
-                "doc_id", F.coalesce("auth", F.lit(0)).alias("auth")
-            ),
-            "auth",
-        )
-        raw_hub = (
-            e.join(auth, e.dst == auth.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.sum("auth").alias("hub"))
-        )
-        hub = _normalized(
-            docs.join(raw_hub, "doc_id", "left").select(
-                "doc_id", F.coalesce("hub", F.lit(0)).alias("hub")
-            ),
-            "hub",
-        )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("auth"), F.asc("doc_id"))
-    return (
-        hub.join(auth, "doc_id")
-        .withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "hub", "auth", "rnk")
-        .orderBy("rnk")
+        auth = _normalized(_gather(docs, e, hub, "src", "dst", "hub", "auth"), "auth")
+        hub = _normalized(_gather(docs, e, auth, "dst", "src", "auth", "hub"), "hub")
+    return _ranked(
+        hub.join(auth, "doc_id"), "auth", "doc_id", "doc_id", "hub", "auth"
     )
 
 
@@ -675,8 +671,7 @@ def connected_components_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortcut edges that merge some blocks; ground truth is the DuckDB
     recursive-CTE closure. Output (doc_id, cluster_id, is_keeper),
     keeper = component min."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
+    docs, n, _ = _graph(spark, sf_dir)
     chain = docs.filter(
         (F.col("doc_id") % CC_CHAIN != CC_CHAIN - 1) & (F.col("doc_id") + 1 < n)
     ).select(F.col("doc_id").alias("u"), (F.col("doc_id") + 1).alias("v"))
@@ -745,31 +740,23 @@ def spam_mass(
     pipeline down-weights — the decision signal the paper builds on
     top of the two scores this composes.
 
-    Composition, not re-implementation: reuses the REGISTERED
-    :func:`pagerank` and :func:`trustrank_scores` operators verbatim
-    (both integer fixed-point with the SAME total teleport mass
-    BASE·N, so the two scores are directly comparable — the paper's
-    core requirement) plus ONE doc_id equi-join; the division is a
-    single same-int/same-int IEEE op, identical in both engines. Scale
-    shape is the two underlying loops' (one equi-join + one map-side
-    agg per iteration, per-iteration lineage checkpoints); the final
-    join is doc_id-partitioned, co-located when both score tables are
-    bucketed by doc_id."""
-    # shared degree-annotated edge table (round 6): both member loops
-    # consume the identical e2; building it once drops one full
-    # edge-gen + degree-agg + checkpoint pass from the composition
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    e2 = _e2_table(docs, docs.count())
-    # the two member loops are independent given the shared e2 — run
-    # them from two driver threads so their per-iteration job latencies
-    # overlap (guide §2.6); scores are the identical DataFrames the
-    # sequential calls produce
+    Composition, not re-implementation: the scores of
+    :func:`pagerank` and :func:`trustrank_scores` come from the shared
+    PageRank step over ONE shared degree-annotated edge table (both
+    have the SAME total teleport mass BASE·N, so the two scores are
+    directly comparable — the paper's core requirement), plus ONE
+    doc_id equi-join; the division is a single same-int/same-int IEEE
+    op, identical in both engines. The two loops are independent given
+    the shared table, so they run from two driver threads and their
+    per-iteration job latencies overlap (guide §2.6)."""
+    docs, n, e = _graph(spark, sf_dir)
+    e2 = _with_degree(e, "src")
     pr_raw, tr_raw = run_parallel(
-        lambda: pagerank(spark, sf_dir, iters, _e2=e2),
-        lambda: trustrank_scores(spark, sf_dir, iters, n_seeds, _e2=e2),
+        lambda: _pr_iterate(docs, e2, _uniform(docs), iters),
+        lambda: _trust_scores(docs, n, e2, iters, n_seeds),
     )
     pr = pr_raw.select("doc_id", F.col("score").alias("pr_score"))
-    tr = tr_raw.select("doc_id", F.col("tscore").alias("tr_score"))
+    tr = tr_raw.select("doc_id", F.col("score").alias("tr_score"))
     m = pr.join(tr, "doc_id")
     excess = F.greatest(
         F.col("pr_score") - F.col("tr_score"), F.lit(0).cast("long")
@@ -806,6 +793,35 @@ ORDER BY p.doc_id
 BFS_HOPS = 4
 
 
+def _bfs(
+    e: DataFrame, seeds: DataFrame, max_hops: int,
+    src: str = "src", dst: str = "dst",
+) -> DataFrame:
+    """(doc_id, dist) for every node within ``max_hops`` of ``seeds``
+    (a doc_id frame) along ``src`` → ``dst`` edges.
+
+    DELTA-frontier BFS, the same shape as the crawl loop's seen
+    anti-join: per hop, join ONLY the newly-discovered frontier (the
+    rows tagged with the previous hop) against the edge table, dedupe,
+    anti-join against visited, tag with the hop number. The folded
+    visited set is the one per-hop checkpoint, like the engine's seen
+    folding. At 10^10 nodes the frontier is the working set, not the
+    graph — O(reachable), not O(V·hops)."""
+
+    def hop(visited: DataFrame, k: int) -> DataFrame:
+        frontier = visited.filter(F.col("dist") == k - 1).select("doc_id")
+        nxt = (
+            frontier.join(e, frontier.doc_id == e[src])
+            .select(F.col(dst).alias("doc_id"))
+            .distinct()
+            .join(visited.select("doc_id"), "doc_id", "left_anti")
+            .select("doc_id", F.lit(k).alias("dist"))
+        )
+        return visited.unionByName(nxt)
+
+    return _iterate(seeds.select("doc_id", F.lit(0).alias("dist")), hop, max_hops)
+
+
 def seed_distance_bfs(
     spark: SparkSession, sf_dir: str, max_hops: int = BFS_HOPS,
     n_seeds: int = TRUST_SEEDS,
@@ -818,41 +834,13 @@ def seed_distance_bfs(
     get ``dist = -1`` (outside the budget → candidates for sitemap
     seeding or budget raise).
 
-    DELTA-frontier BFS, the same shape as the crawl loop's seen
-    anti-join: per hop, join ONLY the newly-discovered frontier against
-    the edge table (not the whole visited set), dedupe, anti-join
-    against visited, tag with the hop number. Each hop is one equi-join
-    + one distinct + one left-anti — all hash exchanges on doc_id; the
-    visited set folds via union + checkpoint exactly like the engine's
-    seen folding, so hop k's plan does not replan hops 1..k-1. At
-    10^10 nodes the frontier is the working set (output of hop k), not
-    the graph — the property that lets web-scale BFS run in
-    O(reachable) not O(V·hops).
-
-    Integer-exact throughout (hop counters), so the DuckDB unrolled-CTE
-    oracle is bit-identical."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n).localCheckpoint(eager=True)
-
-    visited = docs.filter(F.col("doc_id") < n_seeds).select(
-        "doc_id", F.lit(0).alias("dist")
-    )
-    frontier = visited.select("doc_id")
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier.doc_id == e.src)
-            .select(F.col("dst").alias("doc_id"))
-            .distinct()
-            .join(visited.select("doc_id"), "doc_id", "left_anti")
-            .select("doc_id", F.lit(hop).alias("dist"))
-        )
-        # ONE checkpoint per hop (round 6): the folded visited set is
-        # the materialization barrier; the next frontier is a filter
-        # over its blocks (dist = hop), so the former per-hop frontier
-        # checkpoint — a second full job round — is redundant
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("dist") == hop).select("doc_id")
+    The shared delta-frontier BFS (:func:`_bfs`); every hop is one
+    equi-join + one distinct + one left-anti, all hash exchanges on
+    doc_id. Integer-exact throughout (hop counters), so the DuckDB
+    unrolled-CTE oracle is bit-identical."""
+    docs, _, e = _graph(spark, sf_dir)
+    seeds = docs.filter(F.col("doc_id") < n_seeds)
+    visited = _bfs(e.localCheckpoint(eager=True), seeds, max_hops)
     return (
         docs.join(visited, "doc_id", "left")
         .select(
@@ -900,9 +888,33 @@ ORDER BY d.doc_id
 OPIC_ITERS = 5
 
 
+def _opic_cash(docs: DataFrame, e2: DataFrame, iters: int) -> DataFrame:
+    """(doc_id, cash, hist) after ``iters`` synchronous OPIC rounds over
+    the degree-annotated edge table ``e2``."""
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
+        inflow = (
+            e2.join(state, e2.src == state.doc_id)
+            .select("dst", F.expr("cash div outdeg").alias("share"))
+            .groupBy("dst")
+            .agg(F.sum("share").alias("m"))
+        )
+        return state.join(inflow, state.doc_id == inflow.dst, "left").select(
+            "doc_id",
+            F.coalesce("m", F.lit(0)).cast("long").alias("cash"),
+            (F.col("hist") + F.col("cash")).alias("hist"),
+        )
+
+    seed = docs.select(
+        "doc_id",
+        F.lit(SCALE).cast("long").alias("cash"),
+        F.lit(0).cast("long").alias("hist"),
+    )
+    return _iterate(seed, step, iters)
+
+
 def opic_priority(
-    spark: SparkSession, sf_dir: str, iters: int = OPIC_ITERS,
-    _e2: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, iters: int = OPIC_ITERS
 ) -> DataFrame:
     """OPIC (Abiteboul, Preda & Cobéna, WWW 2003 — "Adaptive On-Line
     Page Importance Computation"): the cash-diffusion importance score
@@ -917,47 +929,17 @@ def opic_priority(
 
     Synchronous batched variant: round k distributes every page's cash
     simultaneously (one equi-join on src + one map-side-combined agg on
-    dst per round — identical plan shape and checkpoint discipline to
-    :func:`pagerank`). INTEGER fixed-point: cash scaled by 10^6,
-    per-edge share = cash div outdeg; floor remainders and dangling-page cash
-    evaporate deterministically (same documented convention as
-    pagerank's dangling mass), so k rounds are bit-identical between
-    Spark and the unrolled DuckDB CTE oracle."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e2 = _e2 if _e2 is not None else _e2_table(docs, n)
-
-    state = docs.select(
-        "doc_id",
-        F.lit(SCALE).cast("long").alias("cash"),
-        F.lit(0).cast("long").alias("hist"),
+    dst per round, through ``_iterate``). INTEGER fixed-point: cash
+    scaled by 10^6, per-edge share = cash div outdeg; floor remainders
+    and dangling-page cash evaporate deterministically (same documented
+    convention as pagerank's dangling mass), so k rounds are
+    bit-identical between Spark and the unrolled DuckDB CTE oracle."""
+    docs, _, e = _graph(spark, sf_dir)
+    state = _opic_cash(docs, _with_degree(e, "src"), iters).withColumn(
+        "priority", F.col("hist") + F.col("cash")
     )
-    for _ in range(iters):
-        inflow = (
-            e2.join(state, e2.src == state.doc_id)
-            .select("dst", F.expr("cash div outdeg").alias("share"))
-            .groupBy("dst")
-            .agg(F.sum("share").alias("m"))
-        )
-        state = (
-            state.join(inflow, state.doc_id == inflow.dst, "left")
-            .select(
-                "doc_id",
-                F.coalesce("m", F.lit(0)).cast("long").alias("cash"),
-                (F.col("hist") + F.col("cash")).alias("hist"),
-            )
-            .localCheckpoint(eager=True)  # truncate per-round lineage
-        )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(
-        F.desc(F.col("hist") + F.col("cash")), F.asc("doc_id")
-    )
-    return (
-        state.withColumn("priority", F.col("hist") + F.col("cash"))
-        .withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "cash", "hist", "priority", "rnk")
-        .orderBy("rnk")
+    return _ranked(
+        state, "priority", "doc_id", "doc_id", "cash", "hist", "priority"
     )
 
 
@@ -1024,9 +1006,8 @@ def cocitation_similarity(
     In-degrees join back as a doc-keyed equi-join. score_pct =
     (100·cocite) div min(indeg) states the normalized strength on
     INTEGERS, exact cross-engine."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n).distinct().localCheckpoint(eager=True)
+    _, _, e = _graph(spark, sf_dir)
+    e = e.distinct().localCheckpoint(eager=True)
     outs = (
         e.groupBy("src")
         .agg(F.sort_array(F.collect_set("dst")).alias("ds"))
@@ -1124,13 +1105,15 @@ def host_rank(
     Weighted integer fixed point: per-edge contribution =
     (score·85·w) div (100·W) with W = Σ out-weights of the source host
     — exact int64, so k iterations are bit-identical vs the unrolled
-    DuckDB CTE chain (the pagerank/trustrank discipline). Dangling
-    hosts (no out-edges after the intra-host drop) lose their damped
-    mass deterministically, same as pagerank()."""
-    docs = load(spark, "documents", sf_dir).select("doc_id", "source")
-    n = docs.count()
-    hmap = docs.select("doc_id", F.col("source").alias("host"))
-    e = _edges(docs.select("doc_id"), n)
+    DuckDB CTE chain. Dangling hosts (no out-edges after the
+    intra-host drop) lose their damped mass deterministically, same as
+    pagerank(). The weighted step keeps its own host-keyed columns
+    rather than bending the shared PageRank step, whose plan would
+    change; it runs through ``_iterate`` all the same."""
+    _, _, e = _graph(spark, sf_dir)
+    hmap = load(spark, "documents", sf_dir).select(
+        "doc_id", F.col("source").alias("host")
+    )
     he = (
         e.join(hmap.withColumnsRenamed({"doc_id": "src", "host": "hsrc"}), "src")
         .join(hmap.withColumnsRenamed({"doc_id": "dst", "host": "hdst"}), "dst")
@@ -1141,8 +1124,8 @@ def host_rank(
     outw = he.groupBy("hsrc").agg(F.sum("w").alias("ow"))
     he2 = he.join(outw, "hsrc").localCheckpoint(eager=True)
     hosts = hmap.select("host").distinct()
-    score = hosts.select("host", F.lit(SCALE).cast("long").alias("score"))
-    for _ in range(iters):
+
+    def step(score: DataFrame, _k: int) -> DataFrame:
         contrib = (
             he2.join(score, he2.hsrc == score.host)
             .select(
@@ -1154,30 +1137,16 @@ def host_rank(
             .groupBy("hdst")
             .agg(F.sum("c").alias("m"))
         )
-        score = (
-            hosts.join(contrib, hosts.host == contrib.hdst, "left")
-            .select(
-                "host",
-                (F.lit(BASE).cast("long") + F.coalesce("m", F.lit(0))).alias(
-                    "score"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    indeg = he2.groupBy("hdst").agg(F.count(F.lit(1)).alias("in_hosts"))
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("host"))
-    return (
-        score.join(indeg, score.host == indeg.hdst, "left")
-        .select(
+        return hosts.join(contrib, hosts.host == contrib.hdst, "left").select(
             "host",
-            "score",
-            F.coalesce("in_hosts", F.lit(0)).alias("in_hosts"),
-            F.row_number().over(w).alias("rnk"),
+            (F.lit(BASE).cast("long") + F.coalesce("m", F.lit(0))).alias("score"),
         )
-        .orderBy("rnk")
-    )
+
+    score = _iterate(_uniform(hosts), step, iters)
+    indeg = he2.groupBy("hdst").agg(F.count(F.lit(1)).alias("in_hosts"))
+    scored = score.join(indeg, score.host == indeg.hdst, "left")
+    in_hosts = F.coalesce("in_hosts", F.lit(0)).alias("in_hosts")
+    return _ranked(scored, "score", "host", "host", "score", in_hosts)
 
 
 def host_rank_sql(iters: int = HOST_ITERS) -> str:
@@ -1249,8 +1218,9 @@ def hyperball_centrality(
       2. one map-side-combined groupBy(node, register).max(rank) —
          max is idempotent and associative, so partial aggregation
          collapses duplicate contributions before the shuffle.
-    Per-round localCheckpoint folds lineage (the wave-loop/pagerank
-    discipline — round k never replans rounds 1..k-1).
+    Per-round localCheckpoint folds lineage (round k never replans
+    rounds 1..k-1); the loop stays outside ``_iterate`` because every
+    round's state also feeds the lazily unioned ball-size estimates.
 
     Integer-exact end to end: registers and ranks are ints, ball-size
     estimates reuse the sketch module's all-integer HLL estimator
@@ -1268,9 +1238,8 @@ def hyperball_centrality(
         _rho_sql,
     )
 
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n).localCheckpoint(eager=True)
+    docs, _, e = _graph(spark, sf_dir)
+    e = e.localCheckpoint(eager=True)
 
     hsql = "cast(conv(substr(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)"
     st = docs.select(
@@ -1446,9 +1415,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_id, degree, n_tri, icc) where icc = local clustering
     coefficient on the TRI_SCALE integer grid: 2·n_tri·SCALE div
     (degree·(degree-1)); integer-exact in both engines."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
+    _, _, e = _graph(spark, sf_dir)
     und = (
         e.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -1578,12 +1545,9 @@ def label_propagation(
     Scale shape per round: one labels⋈edges equi-join (each edge ships
     one label), one map-side-combined (node, label) vote count, one
     (node) struct-max agg — no windows over the corpus, no label lists
-    materialized per node. Per-round lineage checkpoints (the pagerank
-    discipline). Output adds the community size via one more map-side
-    agg + a label-keyed join."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
+    materialized per node; rounds run through ``_iterate``. Output adds
+    the community size via one more map-side agg + a label-keyed join."""
+    docs, _, e = _graph(spark, sf_dir)
     sym = (
         e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1591,8 +1555,8 @@ def label_propagation(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = docs.select("doc_id", F.col("doc_id").alias("lbl"))
-    for _ in range(iters):
+
+    def step(labels: DataFrame, _k: int) -> DataFrame:
         votes = (
             sym.join(labels, sym.src == labels.doc_id)
             .groupBy(F.col("dst").alias("v"), "lbl")
@@ -1607,14 +1571,13 @@ def label_propagation(
             )
             .select(F.col("v").alias("doc_id"), (-F.col("best.nl")).alias("lbl"))
         )
-        labels = (
-            docs.join(picked, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("lbl", F.col("doc_id")).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
+        return docs.join(picked, "doc_id", "left").select(
+            "doc_id", F.coalesce("lbl", F.col("doc_id")).alias("lbl")
         )
+
+    labels = _iterate(
+        docs.select("doc_id", F.col("doc_id").alias("lbl")), step, iters
+    )
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("csize"))
     return (
         labels.join(sizes, "lbl")
@@ -1699,9 +1662,7 @@ def kcore_decomposition(
     Output: (doc_id, peel_round, in_core, final_deg) — peel_round = the
     1-based round the node was removed (NULL-free: -1 if it survives),
     final_deg = its degree inside the surviving core (0 if peeled)."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
+    docs, _, e = _graph(spark, sf_dir)
     und = (
         e.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -1740,6 +1701,7 @@ def kcore_decomposition(
         # round's checkpointed frames, not on each other — overlap them
         # from two driver threads (guide §2.6): per-round wall becomes
         # max of the two jobs instead of their sum, identical frames
+        # (hence this loop's own paired checkpoints, not ``_iterate``)
         prev_peeled, prev_cur = peeled, cur
         peeled, cur = run_parallel(
             lambda: (
@@ -1837,30 +1799,24 @@ def rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     converged one?"). High ρ on a host ⇒ OPIC is a safe drop-in there;
     low ρ hosts are where the cash-diffusion approximation diverges.
 
-    REUSES both registered operators verbatim (their unrolled integer
-    fixed-point loops), then: one doc_id join, one source join, ranks
-    within each host by (score desc, doc_id) — a window with per-HOST
-    bounded fan-in, never a global sort — and the exact integer
-    Σd² folds map-side per host. ρ = 1 − 6Σd²/(n(n²−1)) is the one
-    division, same-int/same-int in both engines (ties broken by
+    Both scores come from the registered operators' loops (the shared
+    PageRank step and OPIC's) over ONE shared degree-annotated edge
+    table, run from two driver threads so their per-iteration
+    latencies overlap (guide §2.6); then: one doc_id join, one source
+    join, ranks within each host by (score desc, doc_id) — a window
+    with per-HOST bounded fan-in, never a global sort — and the exact
+    integer Σd² folds map-side per host. ρ = 1 − 6Σd²/(n(n²−1)) is the
+    one division, same-int/same-int in both engines (ties broken by
     doc_id, stated in the ORDER — the classifier-AUC midrank approach
     is unnecessary here because the tie-break makes ranks total).
     """
-    from pyspark.sql import Window
-
-    # shared e2 across the two member rankers (round 6, spam_mass
-    # discipline — they build identical degree-annotated edge tables)
-    dd = load(spark, "documents", sf_dir).select("doc_id")
-    e2 = _e2_table(dd, dd.count())
-    # independent member loops over the shared e2 → two driver threads
-    # (guide §2.6, spam_mass discipline): per-iteration latencies
-    # overlap, identical score tables
-    pr_raw, op_raw = run_parallel(
-        lambda: pagerank(spark, sf_dir, _e2=e2),
-        lambda: opic_priority(spark, sf_dir, _e2=e2),
+    docs, _, e = _graph(spark, sf_dir)
+    e2 = _with_degree(e, "src")
+    pr, op_raw = run_parallel(
+        lambda: _pr_iterate(docs, e2, _uniform(docs), ITERS),
+        lambda: _opic_cash(docs, e2, OPIC_ITERS),
     )
-    pr = pr_raw.select("doc_id", "score")
-    op = op_raw.select("doc_id", "priority")
+    op = op_raw.select("doc_id", (F.col("hist") + F.col("cash")).alias("priority"))
     src = load(spark, "documents", sf_dir).select("doc_id", "source")
     j = src.join(pr, "doc_id").join(op, "doc_id")
     wp = Window.partitionBy("source").orderBy(
@@ -2068,66 +2024,32 @@ def pagerank_warm_start(
     recompute — at 10^10 pages that is the difference between a
     maintenance pass and a daily batch job.
 
-    Same integer fixed-point discipline as pagerank (bit-identical
-    unrolled-CTE oracle); per-iteration lineage checkpoints; the four
-    rank vectors are doc_id-keyed equi-joins at the end."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e_old = _edges(docs, n)
+    Every loop is the shared PageRank step (bit-identical unrolled-CTE
+    oracle); the four rank vectors are doc_id-keyed equi-joins at the
+    end."""
+    docs, n, e_old = _graph(spark, sf_dir)
     delta = docs.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("src"),
         ((F.col("doc_id") * 7 + 11) % n).alias("dst"),
     ).filter(F.col("src") != F.col("dst"))
     e_new = e_old.unionByName(delta)
-
-    def prep(e: DataFrame) -> DataFrame:
-        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        return e.join(outdeg, "src").localCheckpoint(eager=True)
-
-    def loop(e2: DataFrame, iters: int, seed: DataFrame) -> DataFrame:
-        score = seed
-        for _ in range(iters):
-            contrib = (
-                e2.join(score, e2.src == score.doc_id)
-                .select(
-                    "dst",
-                    F.expr(
-                        f"(score * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                    ).alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("m"))
-            )
-            score = (
-                docs.join(contrib, docs.doc_id == contrib.dst, "left")
-                .select(
-                    "doc_id",
-                    (
-                        F.lit(BASE).cast("long") + F.coalesce("m", F.lit(0))
-                    ).alias("score"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        return score
-
-    uniform = docs.select(
-        "doc_id", F.lit(SCALE).cast("long").alias("score")
-    )
-    # round 6: the post-delta degree-annotated edge table is built ONCE
-    # and shared by the full/warm/cold loops (it was re-built and
-    # re-checkpointed per loop — two redundant corpus passes)
+    # the two degree-annotated edge tables are independent: build each
+    # once, from two driver threads, and share it across the loops below
     e2_old, e2_new = run_parallel(
-        lambda: prep(e_old), lambda: prep(e_new)
+        lambda: _with_degree(e_old, "src"), lambda: _with_degree(e_new, "src")
     )
+    uniform = _uniform(docs)
     # dependency graph: old → warm; full and cold depend only on
     # e2_new. Three driver threads (guide §2.6) collapse the 2·ITERS +
     # 2·warm_iters sequential job rounds to max(ITERS + warm_iters,
     # ITERS, warm_iters) — the longest chain — with identical scores
     # (each loop's checkpoints are its own thread's lineage).
     full, warm, cold = run_parallel(
-        lambda: loop(e2_new, ITERS, uniform),
-        lambda: loop(e2_new, warm_iters, loop(e2_old, ITERS, uniform)),
-        lambda: loop(e2_new, warm_iters, uniform),
+        lambda: _pr_iterate(docs, e2_new, uniform, ITERS),
+        lambda: _pr_iterate(
+            docs, e2_new, _pr_iterate(docs, e2_old, uniform, ITERS), warm_iters
+        ),
+        lambda: _pr_iterate(docs, e2_new, uniform, warm_iters),
     )
     return (
         full.select("doc_id", F.col("score").alias("full"))
@@ -2229,60 +2151,31 @@ def salsa_scores(
     scores scaled by 10^6, per-edge shares are exact `div`s (the floor
     remainder is deterministic lost mass, identical cross-engine), so
     the unrolled-CTE DuckDB oracle matches bit-for-bit. Degree columns
-    ride on the edge table built once and lineage-checkpointed; the
-    score loop checkpoints per iteration like pagerank (without it,
-    iteration k replans all k-1 predecessors).
+    ride on the edge table built once and lineage-checkpointed
+    (:func:`_with_degree`).
+
+    The loop carries two frames of state, so it does not go through
+    ``_iterate``: the hub half-step checkpoints per iteration, while
+    the auth half-step stays LAZY — it is referenced exactly once, by
+    the hub half-step (and, after the final iteration, once by the
+    output join) — so folding it into the hub job halves the
+    per-iteration job rounds with a bounded depth-2 plan per
+    checkpoint.
 
     Reference parity: the reference has no link-analysis layer (its
     links table feeds only linked_from lookups, web/app.js:1285+);
     SALSA extends SURVEY §2's graph family (pagerank/hits/trustrank/
     opic) with the degree-normalized member."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
-    e3 = (
-        e.join(outdeg, "src").join(indeg, "dst").localCheckpoint(eager=True)
-    )
-
-    hub = docs.select("doc_id", F.lit(SCALE).cast("long").alias("hub"))
-    auth = None
+    docs, _, e = _graph(spark, sf_dir)
+    e3 = _with_degree(e, "src", "dst")
+    hub = _uniform(docs, "hub")
     for _ in range(iters):
-        raw_auth = (
-            e3.join(hub, e3.src == hub.doc_id)
-            .select("dst", F.expr("hub div outdeg").alias("c"))
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.sum("c").alias("auth"))
-        )
-        # the auth half-step stays LAZY (round 6): it is referenced
-        # exactly once — by the hub half-step below (and, after the
-        # final iteration, once by the output join) — so folding it
-        # into the hub job halves the per-iteration job rounds with a
-        # bounded depth-2 plan per checkpoint (no lineage compounding;
-        # identical integer sums either way)
-        auth = docs.join(raw_auth, "doc_id", "left").select(
-            "doc_id", F.coalesce("auth", F.lit(0)).alias("auth")
-        )
-        raw_hub = (
-            e3.join(auth, e3.dst == auth.doc_id)
-            .select("src", F.expr("auth div indeg").alias("c"))
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.sum("c").alias("hub"))
-        )
-        hub = (
-            docs.join(raw_hub, "doc_id", "left")
-            .select("doc_id", F.coalesce("hub", F.lit(0)).alias("hub"))
-            .localCheckpoint(eager=True)
-        )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("auth"), F.asc("doc_id"))
-    return (
-        hub.join(auth, "doc_id")
-        .withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "hub", "auth", "rnk")
-        .orderBy("rnk")
+        auth = _gather(docs, e3, hub, "src", "dst", F.expr("hub div outdeg"), "auth")
+        hub = _gather(
+            docs, e3, auth, "dst", "src", F.expr("auth div indeg"), "hub"
+        ).localCheckpoint(eager=True)
+    return _ranked(
+        hub.join(auth, "doc_id"), "auth", "doc_id", "doc_id", "hub", "auth"
     )
 
 
@@ -2367,9 +2260,7 @@ def linkpred_resource_alloc(
     one map-side score agg, one anti-join against the adjacency to
     keep non-edges, then global top-k via orderBy+limit (k rows; the
     rank window runs on the k-row result, never the full pair set)."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
+    _, _, e = _graph(spark, sf_dir)
     und = (
         e.select("src", "dst")
         .unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -2399,8 +2290,6 @@ def linkpred_resource_alloc(
     top = non_edges.orderBy(
         F.desc("ra_score"), F.asc("u"), F.asc("v")
     ).limit(k)
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.desc("ra_score"), F.asc("u"), F.asc("v"))
     return (
         top.withColumn("rnk", F.row_number().over(w))
@@ -2480,17 +2369,16 @@ def bowtie_structure(
     pivot within BT_HOPS}, a horizon-bounded SCC estimate like
     kcore's bounded peel, documented rather than hidden. The pivot is
     a 1-ROW FRAME seeding the BFS (orderBy+limit — no driver
-    collect). Both BFS directions are delta-frontier loops
-    (seed_distance_bfs discipline: per hop, join only the new
-    frontier, anti-join visited, checkpoint — O(reachable), not
-    O(V·hops))."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
+    collect). Both BFS directions are the shared delta-frontier BFS
+    (:func:`_bfs`), independent given the checkpointed edge table, so
+    they run from two driver threads (guide §2.6) and overlap their
+    2 × max_hops per-hop job rounds."""
+    docs, _, e = _graph(spark, sf_dir)
     dead = F.pmod(
         md5int(F.concat(F.lit("dead:"), F.col("src").cast("string"))),
         F.lit(BT_DEAD_MOD),
     ) == F.lit(BT_DEAD_RES)
-    e = _edges(docs, n).filter(~dead).localCheckpoint(eager=True)
+    e = e.filter(~dead).localCheckpoint(eager=True)
     pivot = (
         e.groupBy("dst")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2498,33 +2386,9 @@ def bowtie_structure(
         .limit(1)
         .select(F.col("dst").alias("doc_id"))
     )
-
-    def _bfs(src_col: str, dst_col: str) -> DataFrame:
-        visited = pivot.select("doc_id", F.lit(0).alias("dist"))
-        frontier = visited.select("doc_id")
-        for hop in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier.doc_id == e[src_col])
-                .select(F.col(dst_col).alias("doc_id"))
-                .distinct()
-                .join(visited.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", F.lit(hop).alias("dist"))
-            )
-            # ONE checkpoint per hop (round 6, seed_distance_bfs
-            # discipline): fold into visited, then filter the next
-            # frontier out of the checkpointed blocks — halves the
-            # per-hop job rounds across the 2 × max_hops BFS loop
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = visited.filter(F.col("dist") == hop).select(
-                "doc_id"
-            )
-        return visited
-
-    # forward and backward BFS are independent given the checkpointed
-    # edge table — two driver threads (guide §2.6) overlap the 2 ×
-    # max_hops per-hop job rounds; visited sets identical
     fwd_v, bwd_v = run_parallel(
-        lambda: _bfs("src", "dst"), lambda: _bfs("dst", "src")
+        lambda: _bfs(e, pivot, max_hops),
+        lambda: _bfs(e, pivot, max_hops, "dst", "src"),
     )
     fwd = fwd_v.withColumnRenamed("dist", "fwd_dist")
     bwd = bwd_v.withColumnRenamed("dist", "bwd_dist")
@@ -2630,13 +2494,8 @@ def random_walks(
     frontier against it (the rank condition rides in the join), so a
     length-L walk epoch is L joins over a frame that never exceeds
     #walks rows — O(walks·L) total work, embarrassingly partitioned
-    on start. Per-step checkpoints keep iteration t from replanning
-    t-1 (the pagerank loop lesson)."""
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
-    from pyspark.sql import Window
-
+    on start. Steps run through ``_iterate``."""
+    docs, _, e = _graph(spark, sf_dir)
     wr = Window.partitionBy("src").orderBy("dst")
     er = (
         e.distinct()
@@ -2646,12 +2505,8 @@ def random_walks(
         )
         .localCheckpoint(eager=True)
     )
-    cur = docs.select(
-        F.col("doc_id").alias("start"),
-        F.col("doc_id").alias("cur"),
-        F.col("doc_id").cast("string").alias("path"),
-    )
-    for t in range(1, length + 1):
+
+    def step(cur: DataFrame, t: int) -> DataFrame:
         h = md5int(
             F.concat(
                 F.lit("walk:"),
@@ -2662,7 +2517,7 @@ def random_walks(
                 F.col("cur").cast("string"),
             )
         )
-        nxt = cur.join(
+        return cur.join(
             er,
             (cur.cur == er.src) & (er.rk == h % er.outdeg),
             "left",
@@ -2673,7 +2528,13 @@ def random_walks(
                 "path", F.lit("->"), F.coalesce("dst", "cur").cast("string")
             ).alias("path"),
         )
-        cur = nxt.localCheckpoint(eager=True)
+
+    start = docs.select(
+        F.col("doc_id").alias("start"),
+        F.col("doc_id").alias("cur"),
+        F.col("doc_id").cast("string").alias("path"),
+    )
+    cur = _iterate(start, step, length)
     return cur.select(
         "start", F.col("cur").alias("end_node"), "path"
     ).orderBy("start")

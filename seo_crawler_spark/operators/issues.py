@@ -406,19 +406,3 @@ def eeat_scores(pages: DataFrame) -> DataFrame:
         F.col("external_links"),
         F.col("word_count"),
     ).orderBy(F.desc("eeat_score"), "url")
-
-
-def eeat_site_summary(pages: DataFrame) -> DataFrame:
-    """Site-wide aggregate (e-e-a-t.js:374-387)."""
-    s = eeat_scores(pages)
-    joined = pages.join(s.select("url", "eeat_score"), "url")
-    return joined.agg(
-        F.count(F.lit(1)).alias("total_pages"),
-        F.round(F.avg("eeat_score")).cast("long").alias("overall_score"),
-        F.sum(F.when(F.coalesce(F.col("author"), F.lit("")) != "", 1).otherwise(0)).alias("pages_with_author"),
-        F.sum(F.when(F.size(F.coalesce(F.col("json_ld"), F.array())) > 0, 1).otherwise(0)).alias("pages_with_schema"),
-        F.sum(F.when(F.col("external_links") > 0, 1).otherwise(0)).alias("pages_with_external_links"),
-        F.sum(F.when(F.col("url").startswith("https://"), 1).otherwise(0)).alias("secure_pages"),
-        F.sum("external_links").alias("external_citations"),
-        F.avg("external_links").alias("avg_external_links"),
-    )

@@ -131,14 +131,6 @@ def pages_json_envelope(
     )
 
 
-def export_pages_json_envelope(
-    pages: DataFrame, path: str, export_date: str, fields: list[str] | None = None
-) -> None:
-    pages_json_envelope(pages, export_date, fields).coalesce(1).write.mode(
-        "overwrite"
-    ).text(path)
-
-
 def _xml_escape(c):
     """Element-content escaping exactly as ElementTree does for text
     nodes (& first, then angle brackets) — the reference exporter goes

@@ -9,6 +9,7 @@ builds produce."""
 from __future__ import annotations
 
 import threading
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,10 @@ from seo_crawler_spark.parallel import run_parallel
 
 def test_results_in_call_order():
     assert run_parallel(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
+
+
+def test_zero_thunks_return_empty():
+    assert run_parallel() == []
 
 
 def test_single_thunk_runs_inline():
@@ -65,3 +70,15 @@ def test_concurrent_checkpoints_match_sequential(spark):
     )
     assert sorted(map(tuple, par_a.collect())) == sorted(map(tuple, seq_a))
     assert sorted(map(tuple, par_b.collect())) == sorted(map(tuple, seq_b))
+
+
+def test_member_threads_inherit_job_tags(spark):
+    spark.addTag("run-parallel-probe")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            tags = run_parallel(spark.getTags, spark.getTags)
+    finally:
+        spark.removeTag("run-parallel-probe")
+    assert all("run-parallel-probe" in t for t in tags)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
